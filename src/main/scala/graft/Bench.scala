@@ -23,7 +23,10 @@ object Bench {
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    // an integer or nothing: it is written into the JSON artifact as a
+    // bare number, so a malformed value would make the whole line invalid
+    val cpus = sys.env.get("SPARK_GRAFT_CPUS").fold(4)(v => scala.util.Try(v.trim.toInt)
+      .getOrElse(sys.error(s"SPARK_GRAFT_CPUS must be an integer, got '$v'")))
     val outFile = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "bench_out.json")
     // parsed BEFORE the session/warm-up so a malformed value fails fast
     // with a NAMED error instead of an anonymous NumberFormatException

@@ -1,6 +1,7 @@
 package graft.etl
 
 import graft.SparkTestBase
+import graft.sources.IdempotentSink
 import org.apache.spark.sql.Row
 import org.apache.spark.sql.types._
 
@@ -63,6 +64,21 @@ class WodRealTextSpec extends SparkTestBase {
     val out = recs(posts(Row(1L, html, "february-30-31-2024-x", null,
       "2024-06-03T00:00:00")))
     assert(out.head._2 == "2024-06-03")
+    // a day that overflows int (ANSI mode is on: no cast may throw)
+    val overflow = recs(posts(Row(1L, html, "april-99999999999-7-2024", null,
+      "2024-06-03T00:00:00")))
+    assert(overflow.head._2 == "2024-06-03")
+  }
+
+  test("undated slug falls through to the title, then to the post date (ANSI on)") {
+    assert(spark.conf.get("spark.sql.ansi.enabled") == "true")
+    val html = "Monday (Session One)\nA.\nx\nB.\ny\nTuesday (Session Two)\nA.\nz\nB.\nw"
+    val titleOut = recs(posts(Row(1L, html, "weekly-program",
+      "May 6&#8211;12, 2024 Program", "2024-06-03T00:00:00")))
+    assert(titleOut.map(_._2).toSeq == Seq("2024-05-06", "2024-05-07"))
+    val dateOut = recs(posts(Row(1L, html, "weekly-program",
+      "Weekly Program", "2024-06-03T00:00:00")))
+    assert(dateOut.map(_._2).toSeq == Seq("2024-06-03", "2024-06-04"))
   }
 
   test("pairwise rules: <2 day markers yields zero records; pre-marker content dropped") {
@@ -85,5 +101,29 @@ class WodRealTextSpec extends SparkTestBase {
       Row(2L, html2, "may-6-12-2024-x", null, null)))
     assert(out.count(_._1 == 1L) == 2 && out.count(_._1 == 2L) == 2)
     assert(out.filter(_._1 == 2L).map(_._2).toSeq == Seq("2024-05-06", "2024-05-07"))
+  }
+
+  test("repeated pages through cleaned -> writeKeyed compile no new code") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    import org.apache.spark.sql.functions._
+    val sink = java.nio.file.Files.createTempDirectory("wod_codegen").toString + "/sink"
+    // three distinct 20-post pages of the same shape, into one growing sink
+    def page(n: Int) = posts((0 until 20).map { i =>
+      val id = n * 100L + i
+      val html = Seq("Monday", "Tuesday", "Thursday").zipWithIndex.map { case (d, k) =>
+        s"<p><strong>$d (Session ${k + 1})</strong></p>\nSuggested Warm-Up\nrow x ${n + i}\n" +
+          s"A.\nSnatch x ${k + 2}\nB.\nBack Squat &#8211; $id\nC.\nRest&nbsp;90 seconds"
+      }.mkString("\n")
+      Row(id, html, s"april-${1 + i % 7}-7-2024-x", null, null)
+    }: _*)
+    def run(n: Int) = IdempotentSink.writeKeyed(
+      WodRealText.cleaned(page(n)).withColumn("key", sha2(concat_ws(":", lit("save_session"),
+        col("post_id").cast("string"), col("session_idx").cast("string")), 256)),
+      "key", "session_idx", sink)
+    assert(run(1) == (60L, 0L) && run(2) == (60L, 0L))
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    assert(run(3) == (60L, 0L))
+    assert(CodegenMetrics.METRIC_COMPILATION_TIME.getCount == compiled,
+      "page 3 recompiled generated code")
   }
 }

@@ -45,6 +45,25 @@ class IdempotentSinkSpec extends SparkTestBase {
     // winner per key is the smallest doc_id (the deterministic tiebreak)
     assert(kept.agg(max(col("doc_id"))).head().getLong(0) <= 59)
   }
+
+  test("a non-deterministic input is materialized once: its counts are the rows written") {
+    import org.apache.spark.sql.functions._
+    val dir = java.nio.file.Files.createTempDirectory("idem_sink_nondet").toString + "/t"
+    def keyed(df: org.apache.spark.sql.Dataset[_]) =
+      df.select(col("id").cast("string").as("k"), col("id"))
+    // the target already holds the even keys
+    assert(IdempotentSink.writeKeyed(keyed(spark.range(0, 400, 2)), "k", "id", dir) == ((200L, 0L)))
+    // each evaluation keeps a different random half and counts what it emits
+    val emitted = spark.sparkContext.longAccumulator("emitted")
+    val keep = udf((_: Long) => java.util.concurrent.ThreadLocalRandom.current().nextBoolean())
+      .asNondeterministic()
+    val tick = udf { (id: Long) => emitted.add(1); id }.asNondeterministic()
+    val input = keyed(spark.range(0, 400).filter(keep(col("id"))).select(tick(col("id")).as("id")))
+    val (written, skipped) = IdempotentSink.writeKeyed(input, "k", "id", dir)
+    assert(written + skipped == emitted.value.longValue)
+    assert(written == spark.read.parquet(dir).count() - 200)
+    assert(spark.read.parquet(dir).select("k").distinct().count() == 200 + written)
+  }
 }
 
 class CosineSimilaritySpec extends SparkTestBase {
